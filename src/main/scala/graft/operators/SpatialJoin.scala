@@ -1,14 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.{ByteArray, UTF8String}
 import org.locationtech.jts.geom.{Envelope, Geometry}
-import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, STRtree}
+import org.locationtech.jts.index.strtree.{AbstractNode, Boundable, ItemBoundable, ItemDistance, STRtree}
 
 import graft.core.{Geo, GeometryCodec, Mbb, TileBoundary}
-import graft.functions.{st_envelope, st_geomfromwkt}
+import graft.functions.{GeomKernels, st_envelope, st_geomfromwkt}
 import graft.partition.SpatialPartitioner
 
 /** Tile-partitioned spatial join — the Spark-native re-expression of the
@@ -67,6 +69,11 @@ object SpatialJoin {
       sampleTarget: Int = 100000,
       seed: Long = 42L,
       dedup: String = "refpoint",
+      // exact kNN picks its plan by side size: a right (index) side of at
+      // most this many rows is broadcast and every left partition searches
+      // it; otherwise a left (probe) side of at most this many rows is
+      // broadcast and every right partition searches for it; otherwise the
+      // tiled two-pass engine runs. 0 forces the tiled engine.
       knnBroadcastThreshold: Int = 10000,
       earth: Boolean = false,
       twoLevel: Boolean = false,
@@ -710,7 +717,18 @@ object SpatialJoin {
   }
 
   /** EXACT (global) kNN join — the improvement over the reference's
-    * tile-local st_nearest2. One tiling, two cogroup passes:
+    * tile-local st_nearest2. Three plans, chosen by side size against
+    * `cfg.knnBroadcastThreshold` (0 forces the tiled one):
+    *
+    *   - small right (index) side: broadcast it; each left partition
+    *     searches an STRtree over it. Zero shuffles.
+    *   - small left (probe) side: broadcast the probes; each right
+    *     partition searches for them in bounded chunks and emits every
+    *     chunk row within the probe's chunk-local k-th distance; one
+    *     window top-k per `leftId` ranks the union. One shuffle.
+    *   - both sides large: the tiled engine below.
+    *
+    * The tiled engine is one tiling and two cogroup passes:
     *
     *   1. tile-local kNN over each left row's owner tile. A left row is
     *      SAFE — its local top-k is provably the global top-k — when its
@@ -745,11 +763,20 @@ object SpatialJoin {
 
     // Small right side (dim-table shape): broadcast it and scan left once —
     // exact global kNN with ZERO shuffles (the plan a hand-tuned engine
-    // would pick; Catalyst's broadcast-join analog for kNN).
+    // would pick; Catalyst's broadcast-join analog for kNN). Small left
+    // side (a few query points over a large index, the reference's usual
+    // st_nearest shape): broadcast the probes and scan right once — one
+    // rank shuffle of ~probes × chunks × k rows (plus k-th distance ties)
+    // instead of the tiled engine's planning jobs and two cogroups.
     if (cfg.knnBroadcastThreshold > 0) {
-      val probe = right.limit(cfg.knnBroadcastThreshold + 1).collect()
-      if (probe.length <= cfg.knnBroadcastThreshold)
-        return knnBroadcast(left, leftGeom, right, rightGeom, probe, k, tieBreak)
+      val cap = cfg.knnBroadcastThreshold
+      val rRows = right.limit(cap + 1).collect()
+      if (rRows.length <= cap)
+        return knnBroadcast(left, leftGeom, right, rightGeom, rRows, k, tieBreak)
+      val lRows = left.limit(cap + 1).collect()
+      if (lRows.length <= cap)
+        return knnBroadcastProbes(left, leftGeom, leftId, lRows, right, rightGeom,
+          k, tieBreak)
     }
 
     val l = withEnv(left, leftGeom, 0.0)
@@ -859,22 +886,37 @@ object SpatialJoin {
             }
             if (items.length < k) Iterator.single(emit(null, -1.0, -1))
             else {
-              val sorted = items.map { case (g2, rrow) => (g1.distance(g2), rrow) }
-                .zipWithIndex.sortBy { case ((d, _), pos) => (d, pos) }
-              val dk = sorted(k - 1)._1._1
+              // the k+1 smallest under (distance, position), by insertion
+              // into a bounded sorted buffer: only entries 0..k are read
+              // below, and a full per-row sort of a dense tile straggles.
+              // Positions rise with p, so an equal distance never
+              // displaces a kept entry.
+              val m = math.min(k + 1, items.length)
+              val topD = new Array[Double](m); val topR = new Array[Row](m)
+              var n = 0; var p = 0
+              while (p < items.length) {
+                val d = g1.distance(items(p)._1)
+                if (n < m || java.lang.Double.compare(d, topD(m - 1)) < 0) {
+                  var j = if (n < m) n else m - 1
+                  while (j > 0 && java.lang.Double.compare(topD(j - 1), d) > 0) {
+                    topD(j) = topD(j - 1); topR(j) = topR(j - 1); j -= 1
+                  }
+                  topD(j) = d; topR(j) = items(p)._2
+                  if (n < m) n += 1
+                }
+                p += 1
+              }
+              val dk = topD(k - 1)
               // envelope gap to the owner tile's boundary (conservative)
               val edge = math.min(
                 math.min(lrow.getDouble(l1Env(0)) - tb.xmin,
                          tb.xmax - lrow.getDouble(l1Env(2))),
                 math.min(lrow.getDouble(l1Env(1)) - tb.ymin,
                          tb.ymax - lrow.getDouble(l1Env(3))))
-              val tieAtBoundary = sorted.length > k && sorted(k)._1._1 == dk
-              val internalTie =
-                (1 until k).exists(i => sorted(i)._1._1 == sorted(i - 1)._1._1)
+              val tieAtBoundary = m > k && topD(k) == dk
+              val internalTie = (1 until k).exists(i => topD(i) == topD(i - 1))
               if (dk < edge && !tieAtBoundary && !internalTie)
-                sorted.iterator.take(k).zipWithIndex.map {
-                  case (((d, rrow), _), i) => emit(rrow, d, i + 1)
-                }
+                Iterator.tabulate(k)(i => emit(topR(i), topD(i), i + 1))
               else Iterator.single(emit(null, dk, -1))
             }
           }
@@ -1250,13 +1292,9 @@ object SpatialJoin {
         }
       }.toDF()
 
-    // nulls LAST to agree with knnBroadcast's cmpAny — Spark's plain .asc is
-    // nulls-first, which would rank null-tieBreak ties differently depending
-    // on which physical path (broadcast vs tiled) the join took
-    val order = col("knn_dist").asc +: tieBreak.map(col(_).asc_nulls_last)
     val pass2 = cands
-      .withColumn("knn_rank",
-        row_number().over(Window.partitionBy(col(leftId)).orderBy(order: _*)))
+      .withColumn("knn_rank", row_number().over(
+        Window.partitionBy(col(leftId)).orderBy(knnRankOrder(tieBreak): _*)))
       .where(col("knn_rank") <= k)
     graft.core.CacheHygiene.unpersistAfterUse(safe.unionByName(pass2), Seq(p1, l2p))
   }
@@ -1280,9 +1318,10 @@ object SpatialJoin {
         maxDistance = maxDistance)
       .where(col("knn_dist") < maxDistance)
 
-  /** Broadcast exact kNN: the whole (small) right side ships to every task;
-    * each left partition scans it with a bounded (dist, tieBreak) selection.
-    * No shuffle, no tiling, deterministic ties. */
+  /** Small-right broadcast exact kNN: the whole right side ships to every
+    * task; each left partition searches it through [[KnnIndex]] and ranks
+    * each probe's candidates under (distance, tieBreak nulls last). No
+    * shuffle, no tiling, deterministic ties. */
   private def knnBroadcast(left: DataFrame, leftGeom: String,
                            right: DataFrame, rightGeom: String,
                            rRows: Array[Row], k: Int,
@@ -1291,42 +1330,21 @@ object SpatialJoin {
     val rSchema = right.schema
     val rGeomIdx = rSchema.fieldIndex(rightGeom)
     val tieIdx = tieBreak.map(rSchema.fieldIndex).toArray
+    val tieCmp = tieIdx.map(i => tieOrder(rSchema(i).dataType))
     val bc = spark.sparkContext.broadcast(rRows)
-    val lSchema = left.schema
-    val lGeomIdx = lSchema.fieldIndex(leftGeom)
-    val outSchema = StructType(
-      lSchema.fields.map(_.copy(nullable = true)) ++
-        rSchema.fields.map(_.copy(nullable = true)) :+
-        StructField("knn_dist", DoubleType, nullable = false) :+
-        StructField("knn_rank", IntegerType, nullable = false))
-
-    def cmpAny(a: Any, b: Any): Int =
-      if (a == null && b == null) 0
-      else if (a == null) 1
-      else if (b == null) -1
-      else a.asInstanceOf[Comparable[Any]].compareTo(b)
+    val lGeomIdx = left.schema.fieldIndex(leftGeom)
+    val outSchema = knnOutSchema(left, right)
 
     implicit val rowEnc = Encoders.row(outSchema)
     left.mapPartitions { rows =>
-      import scala.jdk.CollectionConverters._
       // deserialize the broadcast side once per partition, into an STRtree:
       // the old linear scan was O(L x R) distance calls — fine at the
       // gate's 15k x 1k, 6e9 calls at the threshold's 300k x 10k shape
       // (17.6x wall for 10x data, SCALE.md sf1 step). Branch-and-bound
       // kNN is O(L log R).
-      val items = bc.value.flatMap { row =>
-        val g = GeometryCodec.fromWkb(row.getAs[Array[Byte]](rGeomIdx))
-        if (g == null) None else Some((g, row))
-      }
-      val tree = new org.locationtech.jts.index.strtree.STRtree()
-      items.foreach { case (g, row) => tree.insert(g.getEnvelopeInternal, (g, row)) }
-      if (items.nonEmpty) tree.build()
-      val itemDist = new org.locationtech.jts.index.strtree.ItemDistance {
-        override def distance(a: org.locationtech.jts.index.strtree.ItemBoundable,
-                              b: org.locationtech.jts.index.strtree.ItemBoundable): Double =
-          a.getItem.asInstanceOf[(Geometry, Row)]._1
-            .distance(b.getItem.asInstanceOf[(Geometry, Row)]._1)
-      }
+      val index = new KnnIndex(bc.value.flatMap { row =>
+        Option(knnGeom(row.getAs[Array[Byte]](rGeomIdx))).map((_, row))
+      })
       val ord = new Ordering[(Double, Row)] {
         override def compare(x: (Double, Row), y: (Double, Row)): Int = {
           val c = java.lang.Double.compare(x._1, y._1)
@@ -1334,7 +1352,7 @@ object SpatialJoin {
           else {
             var i = 0
             while (i < tieIdx.length) {
-              val cc = cmpAny(x._2.get(tieIdx(i)), y._2.get(tieIdx(i)))
+              val cc = tieCmp(i)(x._2.get(tieIdx(i)), y._2.get(tieIdx(i)))
               if (cc != 0) return cc
               i += 1
             }
@@ -1343,37 +1361,161 @@ object SpatialJoin {
         }
       }
       rows.flatMap { lrow =>
-        val g1 = GeometryCodec.fromWkb(lrow.getAs[Array[Byte]](lGeomIdx))
-        if (g1 == null || items.isEmpty) Iterator.empty
+        val g1 = knnGeom(lrow.getAs[Array[Byte]](lGeomIdx))
+        if (g1 == null) Iterator.empty
         else {
-          // phase 1: the k-th smallest distance (a unique order statistic,
-          // however JTS breaks its internal ties) via branch-and-bound
-          val dk =
-            if (items.length <= k) Double.MaxValue
-            else tree.nearestNeighbour(g1.getEnvelopeInternal,
-                (g1, null.asInstanceOf[Row]), itemDist, k)
-              .iterator.map(o => g1.distance(o.asInstanceOf[(Geometry, Row)]._1))
-              .max
-          // phase 2: ALL rights within dk (>= k rows — dk-distance ties
-          // included), ranked under the caller's deterministic
-          // (distance, tieBreak) order — tie handling identical to the
-          // distributed path's
-          val cands =
-            if (dk == Double.MaxValue) items.toSeq
-            else {
-              val env = g1.getEnvelopeInternal.copy(); env.expandBy(dk)
-              tree.query(env).asScala.toSeq
-                .map(_.asInstanceOf[(Geometry, Row)])
-            }
           val lVals = lrow.toSeq
-          cands.iterator.map { case (g2, rrow) => (g1.distance(g2), rrow) }
-            .filter(_._1 <= dk)
-            .toSeq.sorted(ord).take(k)
-            .iterator.zipWithIndex.map { case ((d, rrow), i) =>
-              Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ (i + 1))
-            }
+          index.withinKth(g1, k).sorted(ord).iterator.take(k).zipWithIndex
+            .map { case ((d, rrow), i) => Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ (i + 1)) }
         }
       }
     }.toDF(outSchema.fieldNames.toIndexedSeq: _*)
+  }
+
+  /** Small-left broadcast exact kNN: the probe rows ship to every task;
+    * each right partition indexes its rows in chunks of [[ProbeChunkRows]]
+    * (memory follows the chunk, not the partition) and emits, per probe,
+    * every chunk row within the probe's chunk-local k-th distance. A
+    * probe's global top k under any (distance, tieBreak) order lies inside
+    * that union — fewer than k rows of its chunk can precede a global
+    * top-k row — so one window top-k per `leftId` (WindowGroupLimit, the
+    * tiled pass 2's exact order) finishes it. */
+  private def knnBroadcastProbes(left: DataFrame, leftGeom: String, leftId: String,
+                                 lRows: Array[Row],
+                                 right: DataFrame, rightGeom: String, k: Int,
+                                 tieBreak: Seq[String]): DataFrame = {
+    val spark = left.sparkSession
+    val lGeomIdx = left.schema.fieldIndex(leftGeom)
+    val rGeomIdx = right.schema.fieldIndex(rightGeom)
+    val bc = spark.sparkContext.broadcast(lRows)
+    val outSchema = knnOutSchema(left, right)
+
+    implicit val rowEnc = Encoders.row(outSchema)
+    right.mapPartitions { rows =>
+      val probes = bc.value.flatMap { row =>
+        Option(knnGeom(row.getAs[Array[Byte]](lGeomIdx))).map((_, row.toSeq))
+      }
+      if (probes.isEmpty) Iterator.empty
+      else rows.flatMap { row =>
+        Option(knnGeom(row.getAs[Array[Byte]](rGeomIdx))).map((_, row))
+      }.grouped(ProbeChunkRows).flatMap { chunk =>
+        val index = new KnnIndex(chunk.toArray)
+        probes.iterator.flatMap { case (g1, lVals) =>
+          index.withinKth(g1, k).iterator.map { case (d, rrow) =>
+            Row.fromSeq(lVals ++ rrow.toSeq :+ d :+ 0)
+          }
+        }
+      }
+    }.toDF(outSchema.fieldNames.toIndexedSeq: _*)
+      .withColumn("knn_rank", row_number().over(
+        Window.partitionBy(col(leftId)).orderBy(knnRankOrder(tieBreak): _*)))
+      .where(col("knn_rank") <= k)
+  }
+
+  /** Right rows per [[KnnIndex]] chunk on the small-left broadcast path:
+    * per chunk each probe emits ≥ min(k, chunk) rows, so larger chunks cut
+    * the rank shuffle while smaller ones bound the tree's memory. */
+  private val ProbeChunkRows = 1 << 16
+
+  /** The (distance, tieBreak) rank order of the window top-k: nulls LAST,
+    * as [[tieOrder]] ranks them — Spark's plain .asc is nulls-first, which
+    * would rank null-tieBreak ties differently depending on which physical
+    * path the join took. */
+  private def knnRankOrder(tieBreak: Seq[String]): Seq[Column] =
+    col("knn_dist").asc +: tieBreak.map(col(_).asc_nulls_last)
+
+  /** Output of the broadcast kNN paths: left ++ right (all nullable) ++
+    * knn_dist ++ knn_rank — the tiled engine's shape. */
+  private def knnOutSchema(left: DataFrame, right: DataFrame): StructType =
+    StructType(
+      left.schema.fields.map(_.copy(nullable = true)) ++
+        right.schema.fields.map(_.copy(nullable = true)) :+
+        StructField("knn_dist", DoubleType, nullable = false) :+
+        StructField("knn_rank", IntegerType, nullable = false))
+
+  /** WKB → geometry for the broadcast kNN paths, null when unparseable or
+    * when its envelope is empty or non-finite: the rows the tiled engine's
+    * envelope columns drop, so every path sees the same rows. */
+  private def knnGeom(wkb: Array[Byte]): Geometry = {
+    val g = GeometryCodec.fromWkb(wkb)
+    if (g == null || !GeomKernels.usableEnvelope(g.getEnvelopeInternal)) null else g
+  }
+
+  /** Ascending nulls-last comparison of one tieBreak column's external
+    * values, in the order Spark's sort gives the window top-k of the other
+    * kNN paths: strings by UTF-8 bytes (String.compareTo's UTF-16 units
+    * disagree past U+FFFF: "😀" < "！" there, "！" < "😀" in Spark),
+    * binary unsigned-lexicographic, floating -0.0 == 0.0 and NaN last. */
+  private def tieOrder(dt: DataType): (Any, Any) => Int = {
+    val cmp: (Any, Any) => Int = dt match {
+      case _: StringType => (a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .binaryCompare(UTF8String.fromString(b.asInstanceOf[String]))
+      case BinaryType => (a, b) =>
+        ByteArray.compareBinary(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+      case DoubleType => (a, b) =>
+        SQLOrderingUtil.compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double])
+      case FloatType => (a, b) =>
+        SQLOrderingUtil.compareFloats(a.asInstanceOf[Float], b.asInstanceOf[Float])
+      case _ => (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
+    (a, b) =>
+      if (a == null) { if (b == null) 0 else 1 }
+      else if (b == null) -1
+      else cmp(a, b)
+  }
+
+  /** STRtree over in-memory (geometry, row) items: the per-probe exact kNN
+    * search both broadcast paths run. `withinKth` returns every item whose
+    * distance to the probe is at most the probe's k-th smallest distance
+    * (every item when there are ≤ k): ties at the k-th place included, so
+    * the caller's (distance, tieBreak) rank picks the top k. */
+  private final class KnnIndex(items: Array[(Geometry, Row)]) {
+    import scala.jdk.CollectionConverters._
+    private val tree = new STRtree()
+    private val dataEnv = new Envelope()
+    items.foreach { it =>
+      tree.insert(it._1.getEnvelopeInternal, it)
+      dataEnv.expandToInclude(it._1.getEnvelopeInternal)
+    }
+    if (items.length > 0) tree.build()
+    // radius-growth floor for the re-query loop
+    private val diag = math.hypot(dataEnv.getWidth, dataEnv.getHeight)
+    private val itemDist = new ItemDistance {
+      override def distance(a: ItemBoundable, b: ItemBoundable): Double =
+        a.getItem.asInstanceOf[(Geometry, Row)]._1
+          .distance(b.getItem.asInstanceOf[(Geometry, Row)]._1)
+    }
+
+    def withinKth(g1: Geometry, k: Int): Array[(Double, Row)] =
+      if (items.length <= k) items.map { case (g2, row) => (g1.distance(g2), row) }
+      else {
+        // branch-and-bound SEED radius only: JTS's nearestNeighbourK can
+        // return one item twice, so its max may undershoot the k-th
+        // distance (see knnJoin). The query widens until ≥ k candidates lie
+        // within it and the k-th of them is within the radius — then no
+        // item outside the query is as near, and the result is exact.
+        var r = tree.nearestNeighbour(g1.getEnvelopeInternal,
+            (g1, null.asInstanceOf[Row]), itemDist, k)
+          .iterator.map(o => g1.distance(o.asInstanceOf[(Geometry, Row)]._1)).max
+        var out: Array[(Double, Row)] = null
+        while (out == null) {
+          val env = g1.getEnvelopeInternal.copy(); env.expandBy(r)
+          val cands = tree.query(env).asScala.iterator.map { o =>
+            val (g2, row) = o.asInstanceOf[(Geometry, Row)]
+            (g1.distance(g2), row)
+          }.toArray
+          val kth = new graft.functions.KthHeap(k)
+          cands.foreach(c => kth.insert(c._1))
+          if ((kth.n == k && kth.arr(0) <= r) || cands.length == items.length) {
+            val dk = kth.arr(0)
+            out = cands.filter(_._1 <= dk)
+          } else {
+            val next = math.max(r * 2, diag / 1024)
+            r = if (next > r) next else Double.PositiveInfinity
+          }
+        }
+        out
+      }
   }
 }

@@ -18,11 +18,15 @@ import graft.operators.SpatialJoin
   * reference's tile-local approximation.
   *
   * Execution bridges the child plans' InternalRows into the DataFrame-level
-  * kNN engine (which owns the tiling, density-planned ring radii, the
-  * broadcast small-index fast path, and the WindowGroupLimit probe), then
-  * projects the joined relation back to `left.output ++ right.output`. The
-  * bridge is one narrow row-widening map per side — no extra shuffle or
-  * scan; every exchange in the resulting plan is the engine's own.
+  * kNN engine, then projects the joined relation back to
+  * `left.output ++ right.output`. The bridge is one narrow row-widening map
+  * per side — no extra shuffle or scan; every exchange in the resulting
+  * plan is the engine's own. The engine picks one of three plans by side
+  * size: a small right (index) side is broadcast and each left partition
+  * searches it (no shuffle); else a small left (probe) side is broadcast
+  * and each right partition searches for it, with one window top-k per
+  * probe; else the tiled two-pass engine (tiling, density-planned ring
+  * radii, WindowGroupLimit probe) runs.
   *
   * Distance ties at the k-boundary are broken deterministically by the
   * right row's values: atomic orderable columns compare directly (in output
@@ -39,8 +43,9 @@ import graft.operators.SpatialJoin
   *
   * Tuning via the same runtime confs as SpatialJoinExec:
   * `graft.join.partitioner`, `graft.join.bucket`, `graft.join.sampleTarget`,
-  * plus `graft.knn.broadcastThreshold` (right-side row cap for the
-  * zero-shuffle broadcast fast path; 0 forces the tiled engine).
+  * plus `graft.knn.broadcastThreshold` (the row cap a side must be within
+  * to be broadcast — right side checked first, then left; 0 forces the
+  * tiled engine).
   */
 case class KnnJoinExec(
     left: SparkPlan, right: SparkPlan,

@@ -198,36 +198,65 @@ class SpatialJoinSpec extends SparkTestBase {
     want.foreach { case (i, ds) => assert(got(i) == ds, s"left $i") }
   }
 
+  /** Brute-force exact kNN with ties broken by right id: (left, right,
+    * rank) triples, optionally cut at `maxD`. Null, invalid and empty
+    * geometries take no part, as in every engine path. */
+  private def bruteKnnRanks(pa: Seq[(Long, String)], pb: Seq[(Long, String)], k: Int,
+                            maxD: Double = Double.PositiveInfinity): Set[(Long, Long, Int)] = {
+    def valid(rows: Seq[(Long, String)]) = rows.flatMap { case (i, w) =>
+      Option(GeometryCodec.fromWkt(w)).filterNot(_.isEmpty).map((i, _)) }
+    val gb = valid(pb)
+    valid(pa).flatMap { case (i, g1) =>
+      gb.map { case (j, g2) => (g1.distance(g2), j) }
+        .sortBy(identity).take(k).zipWithIndex
+        .collect { case ((dist, j), r) if dist < maxD => (i, j, r + 1) }
+    }.toSet
+  }
+
+  /** Lattice points (plenty of distance ties), then two rows per side that
+    * match nothing: unparseable WKT and an empty point. */
+  private def knnSides(seed: Long, nl: Int, nr: Int) = {
+    val rnd = new Random(seed)
+    val pa = (0 until nl).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
+    val pb = (0 until nr).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
+    (pa ++ Seq((900L, "not-a-wkt"), (901L, "POINT EMPTY")),
+     pb ++ Seq((900L, "not-a-wkt"), (901L, "POINT EMPTY")))
+  }
+
+  /** The right side hash-spread over 12 partitions by a 4-valued key: most
+    * partitions are empty and up to three hold a single row (< k), the
+    * shapes the small-left broadcast path must union correctly. */
+  private def skewedRight(rows: Seq[(Long, String)]): DataFrame =
+    df(rows, "id2", "g2")
+      .repartition(12, when(col("id2") < 3, col("id2")).otherwise(lit(-1L)))
+
   // the third mode pins the RELATIONAL probe branch (probeCollectMax = 0):
   // the giant-tiling form with the WindowGroupLimit probe + join-back that
-  // the collected-map default skips at spec scale
-  for ((mode, threshold, pcm) <- Seq(
-      ("broadcast", 10000, 1000000L),
-      ("tiled", 0, 1000000L),
-      ("tiled relational-probe", 0, 0L))) {
+  // the collected-map default skips at spec scale. The fourth broadcasts
+  // the small LEFT side: threshold between the two side sizes.
+  for ((mode, threshold, pcm, nl, nr) <- Seq(
+      ("broadcast", 10000, 1000000L, 150, 80),
+      ("tiled", 0, 1000000L, 150, 80),
+      ("tiled relational-probe", 0, 0L, 150, 80),
+      ("broadcast-probes", 100, 1000000L, 60, 200))) {
     test(s"knnJoinExact == brute-force global kNN [$mode path, with ties]") {
-      // points on a small lattice => plenty of distance ties
-      val rnd = new Random(9)
-      val pa = (0 until 150).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
-      val pb = (0 until 80).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
-      val a = df(pa, "id1", "g1"); val b = df(pb, "id2", "g2")
+      val (pa, pb) = knnSides(9, nl, nr)
       val k = 4
-      val got = SpatialJoin.knnJoinExact(a, "g1", "id1", b, "g2", k,
+      val q = SpatialJoin.knnJoinExact(df(pa, "id1", "g1"), "g1", "id1",
+          skewedRight(pb), "g2", k,
           tieBreak = Seq("id2"),
           cfg = SpatialJoin.Config(bucket = 30, knnBroadcastThreshold = threshold,
             probeCollectMax = pcm))
-        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
-
-      val gb = pb.map { case (i, w) => (i, GeometryCodec.fromWkt(w)) }
-      val want = pa.flatMap { case (i, w) =>
-        val g1 = GeometryCodec.fromWkt(w)
-        gb.map { case (j, g2) => (g1.distance(g2), j) }
-          .sortBy(identity).take(k).zipWithIndex
-          .map { case ((_, j), r) => (i, j, r + 1) }
-      }.toSet
+      val got = q.select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
+      val want = bruteKnnRanks(pa, pb, k)
       assert(got.length == got.toSet.size, s"duplicate rows from $mode path")
       assert(got.toSet == want,
         s"$mode mismatch: missing=${(want -- got.toSet).take(5)} extra=${(got.toSet -- want).take(5)}")
+      if (mode == "broadcast-probes") {
+        val plan = q.queryExecution.executedPlan.toString
+        assert(!plan.contains("CoGroup"), s"small-left kNN ran the tiled engine:\n$plan")
+        assert(plan.contains("WindowGroupLimit"), s"rank did not compile to WindowGroupLimit:\n$plan")
+      }
     }
   }
 
@@ -246,42 +275,51 @@ class SpatialJoinSpec extends SparkTestBase {
         tieBreak = Seq("id2"),
         cfg = SpatialJoin.Config(bucket = 20, knnBroadcastThreshold = 0))
       .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
-    val gb = pb.map { case (i, w) => (i, GeometryCodec.fromWkt(w)) }
-    val want = pa.flatMap { case (i, w) =>
-      val g1 = GeometryCodec.fromWkt(w)
-      gb.map { case (j, g2) => (g1.distance(g2), j) }
-        .sortBy(identity).take(k).zipWithIndex
-        .map { case ((_, j), r) => (i, j, r + 1) }
-    }.toSet
+    val want = bruteKnnRanks(pa, pb, k)
     assert(got.length == got.toSet.size, "duplicate rows on the sparse-region path")
     assert(got.toSet == want, s"sparse-region mismatch: " +
       s"missing=${(want -- got.toSet).take(5)} extra=${(got.toSet -- want).take(5)}")
   }
 
-  for ((mode, threshold) <- Seq(("broadcast", 10000), ("tiled", 0))) {
+  for ((mode, threshold, nl, nr) <- Seq(
+      ("broadcast", 10000, 120, 70),
+      ("tiled", 0, 120, 70),
+      ("broadcast-probes", 100, 50, 160))) {
     test(s"knnJoinBounded == brute kNN truncated at d [$mode path]") {
-      val rnd = new Random(23)
-      val pa = (0 until 120).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
-      val pb = (0 until 70).map(i => (i.toLong, s"POINT (${rnd.nextInt(40)} ${rnd.nextInt(20)})"))
-      val a = df(pa, "id1", "g1"); val b = df(pb, "id2", "g2")
+      val (pa, pb) = knnSides(23, nl, nr)
       val k = 4; val d = 2.5 // mid-gap on the integer lattice
-      val got = SpatialJoin.knnJoinBounded(a, "g1", "id1", b, "g2", k, d,
+      val q = SpatialJoin.knnJoinBounded(df(pa, "id1", "g1"), "g1", "id1",
+          skewedRight(pb), "g2", k, d,
           tieBreak = Seq("id2"),
           cfg = SpatialJoin.Config(bucket = 30, knnBroadcastThreshold = threshold))
-        .select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
-
-      val gb = pb.map { case (i, w) => (i, GeometryCodec.fromWkt(w)) }
-      val want = pa.flatMap { case (i, w) =>
-        val g1 = GeometryCodec.fromWkt(w)
-        gb.map { case (j, g2) => ((g1.distance(g2), j), j) }
-          .sortBy(_._1).take(k).zipWithIndex
-          .collect { case (((dist, _), j), r) if dist < d => (i, j, r + 1) }
-      }.toSet
-      assert(got.toSet == want, s"$mode bounded mismatch")
+      val got = q.select("id1", "id2", "knn_rank").as[(Long, Long, Int)].collect()
+      assert(got.toSet == bruteKnnRanks(pa, pb, k, maxD = d), s"$mode bounded mismatch")
       // ranks stay consecutive from 1 (bound removes a suffix, never a gap)
       got.groupBy(_._1).foreach { case (_, rows) =>
         assert(rows.map(_._3).sorted.toSeq == (1 to rows.length).toSeq)
       }
+      if (mode == "broadcast-probes")
+        assert(!q.queryExecution.executedPlan.toString.contains("CoGroup"),
+          "small-left bounded kNN ran the tiled engine")
+    }
+  }
+
+  test("knnJoinExact ranks string ties in Spark's UTF-8 order on every path") {
+    // "！" (U+FF01) sorts AFTER "😀" (U+1F600) by UTF-16 code units but
+    // BEFORE it by UTF-8 bytes, Spark's string order. Both sit at distance 1
+    // from the probe, so k = 1 keeps whichever the tie order ranks first.
+    val lefts = Seq((1L, "POINT (0 0)")).toDF("id1", "w")
+      .withColumn("g1", st_geomfromwkt(col("w"))).drop("w")
+    val rights = Seq(("😀", "POINT (-1 0)"), ("！", "POINT (1 0)"), ("far", "POINT (9 9)"))
+      .toDF("name", "w").withColumn("g2", st_geomfromwkt(col("w"))).drop("w")
+    val picks = Seq(10000, 2, 0).map { threshold => // right-broadcast, left-broadcast, tiled
+      threshold -> SpatialJoin.knnJoinExact(lefts, "g1", "id1", rights, "g2", 1,
+          tieBreak = Seq("name"),
+          cfg = SpatialJoin.Config(bucket = 2, knnBroadcastThreshold = threshold))
+        .select("name").as[String].collect().toSeq
+    }
+    picks.foreach { case (threshold, names) =>
+      assert(names == Seq("！"), s"threshold $threshold picked $names")
     }
   }
 

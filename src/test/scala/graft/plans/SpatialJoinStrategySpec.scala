@@ -217,6 +217,33 @@ class SpatialJoinStrategySpec extends SparkTestBase {
     }
   }
 
+  test("st_nearest with a small probe relation broadcasts the probes; tiled path agrees") {
+    import org.apache.spark.sql.graft.KnnJoinExec
+    val probes = points(25, 27); val index = points(300, 28)
+    probes.toDF("idc", "wc").withColumn("gc", st_geomfromwkt(col("wc")))
+      .createOrReplaceTempView("kc3")
+    index.toDF("ids", "ws").withColumn("gs", st_geomfromwkt(col("ws")))
+      .createOrReplaceTempView("ks3")
+    val sql = "SELECT idc, ids FROM kc3 JOIN ks3 ON st_nearest(gc, gs, 3)"
+    try {
+      // between the sides: the index is too big to broadcast, the probes not
+      spark.conf.set("graft.knn.broadcastThreshold", "100")
+      val q = spark.sql(sql)
+      assert(q.queryExecution.executedPlan.collect { case e: KnnJoinExec => e }.nonEmpty,
+        s"expected KnnJoinExec in:\n${q.queryExecution.executedPlan}")
+      val got = q.as[(Long, Long)].collect()
+      assert(got.length == 25 * 3)
+      assert(got.toSet == bruteKnn(probes, index, 3))
+
+      spark.conf.set("graft.knn.broadcastThreshold", "0")
+      spark.conf.set("graft.join.bucket", "32")
+      assert(spark.sql(sql).as[(Long, Long)].collect().toSet == got.toSet)
+    } finally {
+      spark.conf.unset("graft.knn.broadcastThreshold")
+      spark.conf.unset("graft.join.bucket")
+    }
+  }
+
   test("SQL st_nearest2 plans tile-local KnnJoinExec, agrees with the programmatic engine, swaps sides") {
     import org.apache.spark.sql.graft.KnnJoinExec
     val probes = points(160, 25); val index = points(80, 26)
