@@ -292,14 +292,22 @@ object Bench {
     // record must LABEL itself single-run (bench_sf10_report does).
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     require(nRuns >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $nRuns")
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failed run reads -1 (the gate's record lane goes null); fatal
+    // errors (OOM, interrupts) propagate, and the cause goes to stderr
+    def once(name: String, run: Int,
+             fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       System.gc()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case scala.util.control.NonFatal(e) =>
+          val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+          System.err.println(s"[bench] $name run $run failed: ${e.getClass.getName}: $msg")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     val results: Seq[(String, Option[Double])] = gates.toSeq.map { case (name, fn) =>
-      val runs = Seq.fill(nRuns)(once(fn))
+      val runs = (1 to nRuns).map(once(name, _, fn))
       name -> (if (runs.exists(_ < 0)) None else Some(runs.min))
     }
     if (emit) emitRecord(results)

@@ -46,11 +46,6 @@ object Queries {
     df.sparkSession.read.parquet(path)
   }
 
-  /** Two INDEPENDENT [[writeOracleAux]] checkpoints run as concurrent
-    * driver-thread jobs (guide §2.6 — overlap independent jobs so one
-    * write's task tail back-fills with the other's tasks; job descriptions
-    * are thread-local so the UI stays readable). Only for aux relations
-    * with no data dependency on each other. */
   /** Two INDEPENDENT driver actions as concurrent jobs (guide §2.6 —
     * overlap independent jobs so one action's task tail back-fills with
     * the other's tasks). Dedicated 2-thread pool, not the global pool;

@@ -2,9 +2,14 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.core.{Mbb, TileBoundary}
 import graft.functions.{st_envelope, st_intersects}
@@ -241,11 +246,12 @@ object SpatialStore {
   }
 
   /** Layout-detecting selective scan: the files/dirs holding any wanted
-    * tile, via the manifest (compact layout) or a pruned dir listing (dir
-    * layout). Callers keep their `isin` filter as the exact belt. ONE
-    * layout probe: the manifest-existence answer rides into
-    * [[manifestRead]] instead of being re-asked there (each probe is a
-    * remote HEAD on an object store, on the read hot path). */
+    * tile, via the manifest (compact layout, read on the driver with no
+    * Spark job) or a pruned dir listing (dir layout). Callers keep their
+    * `isin` filter as the exact belt. ONE layout probe: the
+    * manifest-existence answer rides into [[manifestRead]] instead of
+    * being re-asked there (each probe is a remote HEAD on an object
+    * store, on the read hot path). */
   private[sources] def selectTiles(spark: SparkSession, path: String,
                                    wanted: Seq[Int]): DataFrame = {
     val manifestPath = new Path(path, ManifestDir)
@@ -317,17 +323,22 @@ object SpatialStore {
         col(TileCol), col(RowIdCol))
       .sortWithinPartitions(col(TileCol), col(RowIdCol))
       .write.mode("overwrite").parquet(dataPath)
-    val manifest = spark.read.parquet(dataPath)
+    // the manifest needs only the tile column: an explicit schema skips
+    // the inference job a bare read would run
+    val manifest = spark.read.schema(s"$TileCol INT").parquet(dataPath)
       .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
       .agg(min(col(TileCol)).as("min_tile"), max(col(TileCol)).as("max_tile"))
     manifest.coalesce(1).write.mode("overwrite").parquet(s"$path/$ManifestDir")
   }
 
-  /** Compact-layout read half shared by the 2-D and 3-D stores: collect
-    * the manifest (bounded: one row per data file), keep the files whose
-    * [min_tile, max_tile] range contains any wanted tile, and read only
-    * those (resolved against `path/data`, so the manifest survives a
-    * store move). Empty selection returns a schema-true empty relation. */
+  /** Compact-layout read half shared by the 2-D and 3-D stores: read the
+    * manifest on the driver (bounded: one row per data file; no Spark
+    * job), keep the files whose [min_tile, max_tile] range contains any
+    * wanted tile, and read only those (resolved against `path/data`, so
+    * the manifest survives a store move). The data schema comes from one
+    * data file's footer ([[compactSchema]]), so building the frame runs
+    * no Spark job either. Empty selection returns a schema-true empty
+    * relation. */
   private[sources] def manifestRead(spark: SparkSession, path: String,
                                     wanted: Array[Int],
                                     manifestKnown: Option[Boolean] = None)
@@ -364,31 +375,92 @@ object SpatialStore {
     if (!fs.exists(dataPath)) throw new IllegalStateException(
       s"$path has a committed manifest but no $DataDir/ (torn write or " +
         "partial copy) — re-run writeCompact to rebuild the store")
-    val present = fs.listStatus(dataPath)
-      .iterator.map(_.getPath.getName).toSet
-    val entries = spark.read.parquet(s"$path/$ManifestDir")
-      .collect() // bounded: one row per data file
+    val listing = fs.listStatus(dataPath)
+    val present = listing.iterator.map(_.getPath.getName).toSet
+    val conf = spark.sparkContext.hadoopConfiguration
+    val entries = readManifest(fs, conf, path)
     val missing = entries.iterator
-      .map(_.getAs[String]("file")).filterNot(present.contains).toSeq
+      .map(_.file).filterNot(present.contains).toSeq
     if (missing.nonEmpty) throw new IllegalStateException(
       s"$path: manifest names ${missing.length} file(s) absent from data/ " +
         s"(e.g. ${missing.take(3).mkString(", ")}) — stale manifest from a " +
         "torn write; re-run writeCompact to heal the store")
     val files = entries
-      .filter { r =>
-        val lo = r.getAs[Int]("min_tile"); val hi = r.getAs[Int]("max_tile")
-        // any wanted tile inside [lo, hi]?
-        val i = java.util.Arrays.binarySearch(wantedSorted, lo)
-        val next = if (i >= 0) lo else {
+      .filter { e =>
+        // any wanted tile inside [minTile, maxTile]?
+        val i = java.util.Arrays.binarySearch(wantedSorted, e.minTile)
+        val next = if (i >= 0) e.minTile else {
           val ins = -i - 1
           if (ins < wantedSorted.length) wantedSorted(ins) else Int.MaxValue
         }
-        next <= hi
+        next <= e.maxTile
       }
-      .map(r => s"$path/$DataDir/${r.getAs[String]("file")}")
-    if (files.isEmpty) spark.read.parquet(s"$path/$DataDir").limit(0)
-    else spark.read.parquet(files.toIndexedSeq: _*)
+      .map(e => s"$path/$DataDir/${e.file}")
+    val reader = spark.read.schema(compactSchema(conf, path, listing))
+    if (files.isEmpty) reader.parquet(s"$path/$DataDir").limit(0)
+    else reader.parquet(files: _*)
   }
+
+  /** One committed manifest row: a data file and its tile range. */
+  private final case class ManifestEntry(file: String, minTile: Int, maxTile: Int)
+
+  /** The committed manifest, read on the driver with parquet-hadoop's
+    * record reader — one small file, so no Spark job. A manifest dir with
+    * no part file is a torn commit (the overwrite cleared the dir, the
+    * kill came before the new part landed). */
+  private def readManifest(fs: FileSystem, conf: Configuration,
+                           path: String): Seq[ManifestEntry] = {
+    val parts = fs.listStatus(new Path(path, ManifestDir)).filter(isDataFile)
+    if (parts.isEmpty) throw new IllegalStateException(
+      s"$path/$ManifestDir holds no manifest part file (torn write?) — " +
+        "re-run writeCompact to heal it")
+    parts.toSeq.flatMap { part =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), part.getPath)
+        .withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => ManifestEntry(g.getString("file", 0),
+          g.getInteger("min_tile", 0), g.getInteger("max_tile", 0)))
+        .toVector
+      finally reader.close()
+    }
+  }
+
+  /** Spark's hidden-file rule for a parquet dir: `_SUCCESS`, `.crc`
+    * sidecars and in-flight copies are not data files. */
+  private def isDataFile(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+      !n.endsWith("._COPYING_")
+  }
+
+  /** Footer key under which Spark's parquet writer stores the row schema;
+    * Spark's own schema inference reads the same key. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark row schema in one parquet file's footer, read on the
+    * driver. Every file under a store is written by Spark, so a footer
+    * without the key means a foreign file: fail naming it. */
+  private def footerSchema(conf: Configuration, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    if (json == null) throw new IllegalStateException(
+      s"${file.getPath}: parquet footer has no Spark row schema " +
+        s"($SparkSchemaKey) — not a file this store wrote")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** Data schema of a compact store from the first data file in the
+    * caller's `data/` listing. The listing, not the manifest: an
+    * empty-input store has one empty part file and no manifest entries,
+    * and must still read as a schema-true empty frame. */
+  private def compactSchema(conf: Configuration, path: String,
+                            listing: Array[FileStatus]): StructType =
+    footerSchema(conf, listing.find(isDataFile).getOrElse(
+      throw new IllegalStateException(
+        s"$path/$DataDir holds no data file (torn write or partial copy) " +
+          "— re-run writeCompact to rebuild the store")))
 
   /** Read ONLY the given tile partition dirs. `spark.read.parquet(path)`
     * on a tile store lists EVERY leaf dir before Catalyst partition
@@ -400,21 +472,32 @@ object SpatialStore {
     * exist (a tile with no resident rows never got a dir), then an
     * explicit-path read with basePath keeps the partition column while
     * listing only the selected dirs — listing cost proportional to the
-    * window's selectivity, not the store's leaf count. Callers keep their
-    * `isin` filter as a defensive belt. */
+    * window's selectivity, not the store's leaf count. The schema is one
+    * selected file's footer plus the `tile_id` partition column, so no
+    * inference job runs. Callers keep their `isin` filter as a defensive
+    * belt. */
   private[sources] def prunedRead(spark: SparkSession, path: String,
                                   wanted: Seq[Int]): DataFrame = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
     val want = wanted.map(t => s"$TileCol=$t").toSet
     val dirs = fs.listStatus(root).iterator
       .filter(s => s.isDirectory && want.contains(s.getPath.getName))
-      .map(_.getPath.toString).toSeq
+      .map(_.getPath).toSeq
     if (dirs.isEmpty)
       // schema-preserving empty relation (planning-only full listing;
       // a window off the store's space is a degenerate query)
       spark.read.parquet(path).where(lit(false))
-    else spark.read.option("basePath", path).parquet(dirs: _*)
+    else {
+      // lazily: lists a second dir only if the first holds no data file
+      val file = dirs.iterator.flatMap(d => fs.listStatus(d).iterator)
+        .find(isDataFile).getOrElse(throw new IllegalStateException(
+          s"$path: the window's tile dirs hold no data file"))
+      spark.read.option("basePath", path)
+        .schema(footerSchema(conf, file).add(TileCol, IntegerType))
+        .parquet(dirs.map(_.toString): _*)
+    }
   }
 
   /** Containment/window read: driver prunes tiles against the window MBB
@@ -499,15 +582,19 @@ object SpatialStore {
   /** Full-table compact-layout scan with the torn-write guard shared by
     * both stores' [[read]]s: a committed manifest without `data/` must
     * fail with [[manifestRead]]'s heal instruction, not an opaque
-    * path-not-found from the bare parquet read (round-14 advice #1). */
+    * path-not-found from the bare parquet read (round-14 advice #1). The
+    * schema comes from a data file's footer ([[compactSchema]]), so
+    * building the frame runs no Spark job. */
   private[sources] def compactDataScan(spark: SparkSession,
                                        path: String): DataFrame = {
     val dataPath = new Path(path, DataDir)
-    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dataPath.getFileSystem(conf)
     if (!fs.exists(dataPath)) throw new IllegalStateException(
       s"$path has a committed manifest but no $DataDir/ (torn write or " +
         "partial copy) — re-run writeCompact to rebuild the store")
-    spark.read.parquet(s"$path/$DataDir")
+    spark.read.schema(compactSchema(conf, path, fs.listStatus(dataPath)))
+      .parquet(s"$path/$DataDir")
   }
 
   /** Full-table read with replicas collapsed (layout-detecting). */

@@ -9,6 +9,37 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // keep the session for sibling suites
+
+  /** Number of Spark jobs `body` starts on this thread (jobs are matched
+    * by a job group, so other suites' or threads' jobs never count). The
+    * listener bus is async but delivers in order: once a sentinel job run
+    * after `body` is seen, every job `body` started has been seen too. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"graft-test-jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = group + "-sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`sentinel`) => seen.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
 }
 
 object SparkTestBase {

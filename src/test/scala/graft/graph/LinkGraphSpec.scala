@@ -95,4 +95,29 @@ class LinkGraphSpec extends SparkTestBase {
         r.getString(3))).toSet
     assert(got == Set(("t", 3L, 2L, "alpha beta"), ("u", 1L, 1L, "x")))
   }
+
+  test("pageRank restores the session conf when the AQE threshold is bad") {
+    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val thresholdKey = "spark.graft.graph.aqeRowThreshold"
+    val savedFloor = spark.conf.getOption(floorKey)
+    val aqeBefore = spark.conf.get(aqeKey)
+    spark.conf.set(floorKey, "64k")
+    spark.conf.set(thresholdKey, "x")
+    try {
+      val nodes = Seq("A", "B").toDF("host")
+      val edges = Seq(("A", "B", 1L)).toDF("src", "dst", "weight")
+      intercept[NumberFormatException] {
+        LinkGraph.pageRank(nodes, "host", edges, iterations = 1)
+      }
+      assert(spark.conf.getOption(floorKey).contains("64k"))
+      assert(spark.conf.get(aqeKey) == aqeBefore)
+    } finally {
+      spark.conf.unset(thresholdKey)
+      savedFloor match {
+        case Some(v) => spark.conf.set(floorKey, v)
+        case None => spark.conf.unset(floorKey)
+      }
+    }
+  }
 }

@@ -172,4 +172,20 @@ class SpatialStore3dSpec extends SparkTestBase {
     assert(w.exists(_.contains("writeCompact")),
       "over-threshold dir-layout write must point at the compact layout")
   }
+
+  test("building compact 3-D read frames runs no Spark job") {
+    val dir = Files.createTempDirectory("graft_store3d").toString + "/jobs"
+    val df = cubesDf(600)
+    SpatialStore3d.writeCompact(df, C, dir, leafCap = 16)
+    val w = Array(10.0, 12.0, 8.0, 28.0, 30.0, 26.0)
+    var win, full: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { win = SpatialStore3d.containmentRead(spark, dir, w) } == 0)
+    assert(jobsDuring { full = SpatialStore3d.read(spark, dir) } == 0)
+    val want = df.where(
+        $"x0" <= w(3) && lit(w(0)) <= $"x1" &&
+        $"y0" <= w(4) && lit(w(1)) <= $"y1" &&
+        $"z0" <= w(5) && lit(w(2)) <= $"z1").count()
+    assert(want > 0 && win.count() == want)
+    assert(full.count() == 600)
+  }
 }

@@ -426,4 +426,55 @@ class SpatialStoreSpec extends SparkTestBase {
     assert(err.getMessage.contains("no data/"),
       s"wanted the heal-instructing message, got: ${err.getMessage}")
   }
+
+  test("building compact and dir-layout read frames runs no Spark job") {
+    val base = Files.createTempDirectory("graft_store").toString
+    val df = boxesDf(500)
+    val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 20)
+    SpatialStore.write(df, "geom", base + "/c", cfg)
+    SpatialStore.writeDirs(df, "geom", base + "/d", cfg)
+    val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
+    val off = GeometryCodec.toWkb(GeometryCodec.box(-500, -500, -400, -400))
+    var win, empty, full, dirWin: org.apache.spark.sql.DataFrame = null
+    // manifest, data schema and tile-dir schema all resolve on the driver
+    assert(jobsDuring { win = SpatialStore.containmentRead(spark, base + "/c", window) } == 0)
+    assert(jobsDuring { empty = SpatialStore.containmentRead(spark, base + "/c", off) } == 0)
+    assert(jobsDuring { full = SpatialStore.read(spark, base + "/c") } == 0)
+    assert(jobsDuring { dirWin = SpatialStore.containmentRead(spark, base + "/d", window) } == 0)
+    val want = df.where(st_intersects(col("geom"), lit(window))).count()
+    assert(want > 0)
+    assert(win.count() == want && dirWin.count() == want)
+    assert(empty.count() == 0 && full.count() == 500)
+  }
+
+  test("driver-resolved schemas equal Spark's inferred schemas") {
+    val base = Files.createTempDirectory("graft_store").toString
+    // the nested map/struct/array frame: the footer schema must carry
+    // every nested type exactly as Spark's own inference reads it
+    val df = boxesDf(40)
+      .withColumn("meta", struct(
+        map(lit("k"), col("id").cast("string")).as("tags"),
+        col("id").as("n")))
+      .withColumn("hist", array(
+        map(lit("a"), col("id")), map(lit("b"), col("id") * 2)))
+    val cfg = graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 20)
+    val compact = base + "/c"
+    val dirs = base + "/d"
+    SpatialStore.write(df, "geom", compact, cfg)
+    SpatialStore.writeDirs(df, "geom", dirs, cfg)
+    val window = GeometryCodec.toWkb(GeometryCodec.box(10, 10, 30, 25))
+    val internal = Seq(SpatialStore.RowIdCol, SpatialStore.RowId2Col, SpatialStore.TileCol)
+    val compactRaw = spark.read.parquet(compact + "/data").schema
+    val dirRaw = spark.read.parquet(dirs).schema
+    def user(raw: org.apache.spark.sql.types.StructType) =
+      org.apache.spark.sql.types.StructType(raw.filterNot(f => internal.contains(f.name)))
+    assert(SpatialStore.read(spark, compact).schema == user(compactRaw))
+    assert(SpatialStore.containmentRead(spark, compact, window).schema == user(compactRaw))
+    assert(SpatialStore.containmentRead(spark, dirs, window).schema == user(dirRaw))
+    // before the internal columns drop: the selective scans themselves
+    def wanted(store: String) = SpatialStore.readMeta(spark, store).tiles
+      .filter(_.mbb.intersects(graft.core.Mbb(10, 10, 30, 25))).map(_.tileId).toSeq
+    assert(SpatialStore.selectTiles(spark, compact, wanted(compact)).schema == compactRaw)
+    assert(SpatialStore.selectTiles(spark, dirs, wanted(dirs)).schema == dirRaw)
+  }
 }

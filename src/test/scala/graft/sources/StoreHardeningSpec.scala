@@ -164,4 +164,40 @@ class StoreHardeningSpec extends SparkTestBase {
       graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
     assert(SpatialStore.read(spark, base + "/b").count() == 60)
   }
+
+  test("manifest dir without a part file (torn commit) fails with heal hint") {
+    val dir = Files.createTempDirectory("graft_torn").toString + "/s"
+    SpatialStore.write(boxesDf(50), "geom", dir,
+      graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
+    // the manifest overwrite cleared the dir; the kill came before the
+    // new part file landed
+    val manifest = new org.apache.hadoop.fs.Path(dir, "_graft_manifest")
+    val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(manifest).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).foreach(fs.delete(_, false))
+    assert(fs.exists(manifest))
+    val window = graft.core.GeometryCodec.toWkb(
+      graft.core.GeometryCodec.box(10, 10, 30, 25))
+    val e = intercept[IllegalStateException] {
+      SpatialStore.containmentRead(spark, dir, window).count()
+    }
+    assert(e.getMessage.contains("torn write") &&
+      e.getMessage.contains("writeCompact"),
+      s"wanted the heal-instructing error, got: ${e.getMessage}")
+  }
+
+  test("empty-input store reads as a schema-true empty frame") {
+    val dir = Files.createTempDirectory("graft_empty").toString + "/s"
+    val df = boxesDf(20).where(lit(false))
+    SpatialStore.write(df, "geom", dir,
+      graft.operators.SpatialJoin.Config(partitioner = "fg", bucket = 10))
+    def fields(d: org.apache.spark.sql.DataFrame) =
+      d.schema.map(f => f.name -> f.dataType)
+    val back = SpatialStore.read(spark, dir)
+    assert(back.count() == 0 && fields(back) == fields(df))
+    val window = graft.core.GeometryCodec.toWkb(
+      graft.core.GeometryCodec.box(10, 10, 30, 25))
+    val win = SpatialStore.containmentRead(spark, dir, window)
+    assert(win.count() == 0 && fields(win) == fields(df))
+  }
 }
